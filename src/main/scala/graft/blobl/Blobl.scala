@@ -15,6 +15,12 @@ import Values.{BT, BV}
   * drops the message. Both compile here to a single Catalyst projection
   * + filter over the input DataFrame — fully distributed, no
   * row-at-a-time interpreter.
+  *
+  * JSON-mode cost model, per message: the input is parsed once (`this`);
+  * each run of unconditional field assignments (`root.a = …`,
+  * `root.b.c = …`) is ONE graft_json_merge — one parse and one write of
+  * the document under construction; a normalize runs only when a
+  * whole-root assignment (`root = …`) wrote the document last.
   */
 object Blobl {
 
@@ -59,6 +65,11 @@ object Blobl {
                metadataCol: Option[String] = None): DataFrame =
     run(df, src, envVars, valueCol, metadataCol, fresh = false)
 
+  /** Body of [[mapping]] and [[mutation]]. Per message it parses the
+    * input once, merges each run of unconditional field assignments
+    * into the document in one graft_json_merge, and normalizes only
+    * when a whole-root assignment wrote the document last.
+    */
   private def run(df: DataFrame, src: String, envVars: Map[String, String],
                   valueCol: String, metadataCol: Option[String],
                   fresh: Boolean): DataFrame = {
@@ -77,7 +88,7 @@ object Blobl {
     val res = Compiler.runStatements(m.stmts, init, env)
     // rows no root assignment touched pass through VERBATIM (not even
     // re-normalized — the content may not be JSON at all)
-    val newValue = when(res.assigned, docText(res.rootJson))
+    val newValue = when(res.assigned, docText(res))
       .otherwise(col(valueCol))
     // one select so value and metadata expressions BOTH see the original
     // input columns (chained withColumn would make the second see the
@@ -117,7 +128,7 @@ object Blobl {
     // part — the reference SKIPS result_map for it (the original document
     // passes through untouched), so gate every merge on isNotNull
     val hasBranch = col(branchCol).isNotNull
-    val newValue = when(hasBranch && res.assigned, docText(res.rootJson))
+    val newValue = when(hasBranch && res.assigned, docText(res))
       .otherwise(col(rootCol))
     val sel = df.columns.filterNot(_ == branchCol).map {
       case c if c == rootCol => newValue.as(rootCol)
@@ -134,13 +145,16 @@ object Blobl {
     * their normalized JSON text, but a STRING document becomes its raw
     * bytes (unquoted) — the reference's content() view of a string root
     * (config/test/bloblang/walk_json.yaml expects `foo & bar`, not
-    * `"foo & bar"`).
+    * `"foo & bar"`). A canonical root (a merge wrote it last) is an
+    * object already in normalized form and is taken as is.
     */
-  private def docText(rootJson: Column): Column = {
-    val norm = call_function("graft_json_normalize", rootJson)
-    when(norm.startsWith("\""), try_parse_json(norm).cast("string"))
-      .otherwise(norm)
-  }
+  private def docText(res: Compiler.DocResult): Column =
+    if (res.canonical) res.rootJson
+    else {
+      val norm = call_function("graft_json_normalize", res.rootJson)
+      when(norm.startsWith("\""), try_parse_json(norm).cast("string"))
+        .otherwise(norm)
+    }
 
   /** `mapping` in TYPED mode: `this.<field>` binds to typed columns and
     * every `root.<name> = …` assignment becomes an output column named

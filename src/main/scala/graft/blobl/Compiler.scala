@@ -447,41 +447,28 @@ object Compiler {
       var e2 = env.withThis(v).copy(depth = env.depth + 1,
         applying = env.applying + name)
       var result: Option[BV] = None       // last whole-root value
-      var built: Option[Column] = None    // JSON text under construction
+      val built = new RootDoc(lit("{}")) // JSON text under construction
       var sawNested = false
       stmts.foreach {
         case LetAssign(n, ve) => e2 = e2.withVar(n, compile(ve, e2))
         case RootAssign(Seq(), ve) =>
           val v0 = compile(ve, e2)
           result = Some(v0)
-          built = Some(serializeRoot(v0))
-        case RootAssign(segs, ve)
-            if segs.exists(s => s == "-" || s.forall(_.isDigit)) =>
-          // array path segments — same kernel route as runStatements
+          built.write(None)(_ => serializeRoot(v0))
+        case RootAssign(segs, ve) if segs.exists(isIndex) =>
           sawNested = true
           val v0 = compile(ve, e2)
-          val pathJson = lit(segs.map(s =>
-            "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\"")
-            .mkString("[", ",", "]"))
-          val leaf = v0.t match {
-            case Del => lit("\"" + DeletedSentinel + "\"")
-            case N => lit("null")
-            case _ => coalesce(toJsonText(v0), lit("null"))
-          }
-          built = Some(call_function("graft_json_set",
-            built.getOrElse(lit("{}")), pathJson, leaf))
+          built.write(None)(setPath(_, segs, v0))
         case RootAssign(segs, ve) =>
           // nested path assignment builds the map's document
           // progressively (config/template_examples/
           // processor_hydration.yaml map bodies)
           sawNested = true
-          val v0 = compile(ve, e2)
-          built = Some(call_function("graft_json_merge",
-            built.getOrElse(lit("{}")), nestedPatch(segs, v0)))
+          built.stage(segs, compile(ve, e2), None)
         case other => throw new IllegalArgumentException(
           s"map $name: map bodies support let + root assignments, got $other")
       }
-      if (sawNested) BV(parse_json(built.get), V)
+      if (sawNested) BV(parse_json(built.result()._1), V)
       else result.getOrElse(BV(asVariant(v), V))
     }
   }
@@ -497,32 +484,52 @@ object Compiler {
   private[blobl] def batchFrame(env: Env): org.apache.spark.sql.expressions.WindowSpec =
     batchPart(env).rowsBetween(Long.MinValue, Long.MaxValue)
 
+  /** Direct sub-expressions (static scans). */
+  private def children(e: Expr): Seq[Expr] = e match {
+    case MethodCall(r, _, as) => r +: as
+    case FnCall(_, as) => as
+    case BinOp(_, l, r) => Seq(l, r)
+    case UnOp(_, x) => Seq(x)
+    case Pipe(l, r) => Seq(l, r)
+    case IfExpr(c, t, e2) => Seq(c, t) ++ e2
+    case MatchExpr(t, cs) => t.toSeq ++ cs.flatMap { case (c, b) => c.toSeq :+ b }
+    case ArrLit(xs) => xs
+    case ObjLit(fs) => fs.map(_._2)
+    case ObjLitDyn(fs) => fs.flatMap(f => f._1.toOption.toSeq :+ f._2)
+    case Lambda(_, b) => Seq(b)
+    case _ => Seq.empty
+  }
+
+  /** Expressions a statement evaluates itself (not its nested blocks). */
+  private def stmtExprs(s: Stmt): Seq[Expr] = s match {
+    case RootAssign(_, v) => Seq(v)
+    case LetAssign(_, v) => Seq(v)
+    case MetaAssign(_, v) => Seq(v)
+    case MetaWholeAssign(v) => Seq(v)
+    case IfStmt(c, _, _) => Seq(c)
+    case MapDecl(_, _) => Seq.empty
+  }
+
+  /** Does the expression read the root under construction (RHS
+    * `root…`)? A named-map application counts too: its body resolves
+    * `root` against the same document.
+    */
+  private def readsRoot(e: Expr): Boolean = e match {
+    case BarePath(segs) => segs.head == "root"
+    case MethodCall(_, "apply", _) => true
+    case _ => children(e).exists(readsRoot)
+  }
+
   /** Map names applied anywhere in a statement list (static scan). */
   private def appliesIn(stmts: Seq[Stmt]): Set[String] = {
-    def inExpr(e: Expr): Set[String] = e match {
-      case MethodCall(r, "apply", Seq(StrLit(n))) => inExpr(r) + n
-      case MethodCall(r, _, as) => inExpr(r) ++ as.flatMap(inExpr)
-      case FnCall(_, as) => as.flatMap(inExpr).toSet
-      case BinOp(_, l, r) => inExpr(l) ++ inExpr(r)
-      case UnOp(_, x) => inExpr(x)
-      case Pipe(l, r) => inExpr(l) ++ inExpr(r)
-      case IfExpr(c, t, e2) =>
-        inExpr(c) ++ inExpr(t) ++ e2.toSeq.flatMap(inExpr)
-      case MatchExpr(t, cs) => t.toSeq.flatMap(inExpr).toSet ++
-        cs.flatMap { case (c, b) => c.toSeq.flatMap(inExpr) ++ inExpr(b) }
-      case ArrLit(xs) => xs.flatMap(inExpr).toSet
-      case ObjLit(fs) => fs.flatMap(f => inExpr(f._2)).toSet
-      case ObjLitDyn(fs) => fs.flatMap(f =>
-        f._1.toOption.toSeq.flatMap(inExpr) ++ inExpr(f._2)).toSet
-      case Lambda(_, b) => inExpr(b)
-      case _ => Set.empty
-    }
+    def inExpr(e: Expr): Set[String] = (e match {
+      case MethodCall(_, "apply", Seq(StrLit(n))) => Set(n)
+      case _ => Set.empty[String]
+    }) ++ children(e).flatMap(inExpr)
     stmts.flatMap {
-      case RootAssign(_, v) => inExpr(v)
-      case LetAssign(_, v) => inExpr(v)
-      case MetaAssign(_, v) => inExpr(v)
       case IfStmt(c, t, e2) => inExpr(c) ++ appliesIn(t) ++ appliesIn(e2)
       case MapDecl(_, ss) => appliesIn(ss)
+      case s => stmtExprs(s).flatMap(inExpr)
     }.toSet
   }
 
@@ -593,18 +600,100 @@ object Compiler {
     * `assigned` = whether ANY root assignment fired for the row; when
     * false the message passes through verbatim (reference: a mapping
     * that never assigns root is a pass-through, config/test/filters.yaml).
+    * `canonical` = `rootJson` is already canonical JSON text (an object
+    * with sorted keys and no deleted markers) because an unconditional
+    * merge wrote it last, or nothing wrote it after the canonical init:
+    * callers then skip the trailing normalize.
     */
   case class DocResult(rootJson: Column, deleted: Column,
-                       meta: Option[Column], assigned: Column)
+                       meta: Option[Column], assigned: Column,
+                       canonical: Boolean)
+
+  /** `cond` = None: unconditional, no CASE WHEN around the new value. */
+  private def guarded(cond: Option[Column], next: Column, prev: Column): Column =
+    cond.fold(next)(c => when(c, next).otherwise(prev))
+
+  /** The root document under construction (JSON text). Field
+    * assignments `root.a.b = v` wait in a pending patch and land
+    * together as ONE graft_json_merge of `{"a":{"b":v},…}`: a run of
+    * assignments costs one parse and one write of the document, not one
+    * per field. A pending patch holds assignments under one condition
+    * with distinct head keys; staging under another condition or a
+    * repeated head, any other write, and [[result]] flush it first, so
+    * statement order holds. Readers of the document under construction
+    * must [[flush]] before reading [[current]].
+    */
+  private final class RootDoc(init: Column) {
+    private var doc = init
+    private var pending = Vector.empty[(String, Column)] // head key -> value
+    private var pendingCond: Option[Column] = None
+    private var canonical = true
+    var assigned: Column = lit(false)
+
+    def current: Column = doc
+
+    def stage(segs: Seq[String], v0: BV, cond: Option[Column]): Unit = {
+      // one condition per patch, compared by reference: every statement
+      // block passes its own condition object down unchanged
+      if (!(cond eq pendingCond) || pending.exists(_._1 == segs.head)) flush()
+      // deleted() travels as the sentinel the merge removes; an assigned
+      // null stays a JSON null (to_json keeps null fields below)
+      val leaf = v0.t match {
+        case Del => lit(DeletedSentinel).cast("variant")
+        case N => lit(null).cast("variant")
+        case _ => asVariant(v0)
+      }
+      pending :+= segs.head -> segs.tail.foldRight(leaf)((seg, acc) => struct(acc.as(seg)))
+      pendingCond = cond
+    }
+
+    def flush(): Unit = if (pending.nonEmpty) {
+      val patch = to_json(struct(pending.map { case (k, v) => v.as(k) }: _*),
+        Map("ignoreNullFields" -> "false"))
+      pending = Vector.empty
+      write(pendingCond, merged = true)(call_function("graft_json_merge", _, patch))
+    }
+
+    /** Replace the document by `next(document)` where `cond` holds. */
+    def write(cond: Option[Column], merged: Boolean = false)(next: Column => Column): Unit = {
+      flush()
+      doc = guarded(cond, next(doc), doc)
+      canonical = merged && cond.isEmpty
+      assigned = cond.fold(lit(true))(assigned || _)
+    }
+
+    def result(): (Column, Boolean) = { flush(); (doc, canonical) }
+  }
+
+  private def isIndex(seg: String): Boolean = seg == "-" || seg.forall(_.isDigit)
+
+  /** `root.<segs> = leaf` for paths with ARRAY segments
+    * (`root.fallback."-".retry = x` appends, `root.fallback."0".x = y`
+    * indexes — bloblang path assignment,
+    * config/template_examples/output_dead_letter.yaml): the object-patch
+    * merge can't express these, so they route through graft_json_set.
+    */
+  private def setPath(doc: Column, segs: Seq[String], v0: BV): Column = {
+    val pathJson = lit(segs.map(s =>
+      "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\"")
+      .mkString("[", ",", "]"))
+    val leaf = v0.t match {
+      case Del => lit("\"" + DeletedSentinel + "\"")
+      case N => lit("null")
+      case _ => coalesce(toJsonText(v0), lit("null"))
+    }
+    call_function("graft_json_set", doc, pathJson, leaf)
+  }
 
   /** Fold statements into (rootJson, deletedCond, meta). `rootInit` is
-    * "{}" for `mapping` (fresh doc) or the normalized input for
-    * `mutation`.
+    * canonical JSON text: "{}" for `mapping` (fresh doc) or the
+    * normalized input for `mutation`. Each run of field assignments is
+    * one merge; only a whole-root assignment leaves a document that
+    * still needs normalizing.
     */
   def runStatements(stmts: Seq[Stmt], rootInit: Column, env0: Env): DocResult = {
-    var root = rootInit
+    val doc = new RootDoc(rootInit)
     var deleted: Column = lit(false)
-    var assigned: Column = lit(false)
     // named maps register before anything compiles (reference maps are
     // file-scoped and may be declared after their first use)
     var env = env0.copy(maps = env0.maps ++ stmts.collect {
@@ -612,12 +701,13 @@ object Compiler {
     })
     var meta = env0.metaCol
 
-    def apply(ss: Seq[Stmt], cond: Column): Unit = {
+    def apply(ss: Seq[Stmt], cond: Option[Column]): Unit = {
       // statements see the root built SO FAR (RHS `root` reads) and the
       // metadata as updated by EARLIER statements (`meta = …` then
       // `@key` — config/rag/ingestion strips prefixes then reads)
-      def envNow: Env = env.copy(rootCol = Some(root), metaCol = meta)
-      ss.foreach {
+      def envNow: Env = env.copy(rootCol = Some(doc.current), metaCol = meta)
+      val on = cond.getOrElse(lit(true))
+      def step(s: Stmt): Unit = s match {
       case MapDecl(_, _) => () // collected above
 
       case LetAssign(name, value) =>
@@ -648,51 +738,26 @@ object Compiler {
       case RootAssign(Seq(), value) =>
         compile(value, envNow) match {
           case BV(_, Del, _) =>
-            deleted = deleted || cond
+            deleted = deleted || on
           case v0 if v0.omitNull =>
             // e.g. root = (expr with deleted() in a match arm) — null
             // means the deleting branch fired
-            deleted = deleted || (cond && v0.col.isNull)
-            root = when(cond && v0.col.isNotNull, serializeRoot(v0)).otherwise(root)
-            assigned = assigned || (cond && v0.col.isNotNull)
+            deleted = deleted || (on && v0.col.isNull)
+            doc.write(Some(on && v0.col.isNotNull))(_ => serializeRoot(v0))
           case v0 =>
-            root = when(cond, serializeRoot(v0)).otherwise(root)
-            assigned = assigned || cond
+            doc.write(cond)(_ => serializeRoot(v0))
         }
 
-      case RootAssign(segs, value)
-          if segs.exists(s => s == "-" || s.forall(_.isDigit)) =>
-        // ARRAY path segments (`root.fallback."-".retry = x` appends,
-        // `root.fallback."0".x = y` indexes — bloblang path assignment,
-        // config/template_examples/output_dead_letter.yaml): the
-        // object-patch merge can't express these, so route through the
-        // graft_json_set kernel
+      case RootAssign(segs, value) if segs.exists(isIndex) =>
         val v0 = compile(value, envNow)
-        val pathJson = lit(segs.map(s =>
-          "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\"")
-          .mkString("[", ",", "]"))
-        val leaf = v0.t match {
-          case Del => lit("\"" + DeletedSentinel + "\"")
-          case N => lit("null")
-          case _ => coalesce(toJsonText(v0), lit("null"))
-        }
-        val assignCond = if (v0.omitNull) cond && v0.col.isNotNull else cond
-        root = when(assignCond,
-          call_function("graft_json_set", root, pathJson, leaf))
-          .otherwise(root)
-        assigned = assigned || assignCond
+        doc.write(if (v0.omitNull) Some(on && v0.col.isNotNull) else cond)(
+          setPath(_, segs, v0))
 
       case RootAssign(segs, value) =>
-        // nested one-path patch {a:{b:<v>}} deep-merged into the doc;
-        // nulls preserved so an assigned null survives into the merge —
-        // except omit-null values (false if-without-else), which skip
-        // the assignment entirely
+        // an omit-null value (false if-without-else) skips the
+        // assignment: its own condition, so a patch of its own
         val v0 = compile(value, envNow)
-        val patch = nestedPatch(segs, v0)
-        val assignCond = if (v0.omitNull) cond && v0.col.isNotNull else cond
-        root = when(assignCond,
-          call_function("graft_json_merge", root, patch)).otherwise(root)
-        assigned = assigned || assignCond
+        doc.stage(segs, v0, if (v0.omitNull) Some(on && v0.col.isNotNull) else cond)
 
       case MetaAssign(key, value) =>
         // assignment REPLACES an existing key (map_concat alone trips
@@ -700,9 +765,9 @@ object Compiler {
         // config/examples/joining_streams.yaml reassigns output_topic)
         val m = meta.getOrElse(map().cast("map<string,string>"))
         val v0 = asString(compile(value, envNow))
-        meta = Some(when(cond, map_concat(
+        meta = Some(guarded(cond, map_concat(
           map_filter(m, (k, _) => k =!= lit(key)),
-          map(lit(key), v0))).otherwise(m))
+          map(lit(key), v0)), m))
 
       case MetaWholeAssign(value) =>
         // `meta = expr` replaces the whole map (the expr must produce
@@ -713,29 +778,23 @@ object Compiler {
           org.apache.spark.sql.types.MapType(
             org.apache.spark.sql.types.StringType,
             org.apache.spark.sql.types.StringType))
-        meta = Some(when(cond, coalesce(newMap, m)).otherwise(m))
+        meta = Some(guarded(cond, coalesce(newMap, m), m))
 
       case IfStmt(c, thn, els) =>
-        val cc = asBool(compile(c, envNow))
-        apply(thn, cond && coalesce(cc, lit(false)))
-        if (els.nonEmpty) apply(els, cond && !coalesce(cc, lit(false)))
+        val cc = coalesce(asBool(compile(c, envNow)), lit(false))
+        apply(thn, Some(on && cc))
+        if (els.nonEmpty) apply(els, Some(on && !cc))
+      }
+      ss.foreach { s =>
+        // a statement reading `root` must see every earlier assignment
+        if (stmtExprs(s).exists(readsRoot)) doc.flush()
+        step(s)
       }
     }
 
-    apply(stmts, lit(true))
-    DocResult(root, deleted, meta, assigned)
-  }
-
-  /** JSON text of a nested one-path patch: {a:{b:{c: value}}}. */
-  private def nestedPatch(segs: Seq[String], v0: BV): Column = {
-    val leaf: Column = v0.t match {
-      case Del => lit(DeletedSentinel).cast("variant")
-      case N => lit(null).cast("variant")
-      case _ => asVariant(v0)
-    }
-    val nested = segs.tail.foldRight(leaf)((seg, acc) =>
-      parse_json(to_json(struct(acc.as(seg)), Map("ignoreNullFields" -> "false"))))
-    to_json(struct(nested.as(segs.head)), Map("ignoreNullFields" -> "false"))
+    apply(stmts, None)
+    val (root, canonical) = doc.result()
+    DocResult(root, deleted, meta, doc.assigned, canonical)
   }
 
   private def serializeRoot(v0: BV): Column = toJsonText(v0)

@@ -489,8 +489,9 @@ object Methods {
         Compiler.Json(asVariant(recv), toJsonText(recv)),
         Map.empty, None, Map.empty)
       val res = Compiler.runStatements(m.stmts, lit("{}"), env)
-      BV(parse_json(when(!res.deleted && res.assigned,
-        call_function("graft_json_normalize", res.rootJson))), V)
+      val doc = if (res.canonical) res.rootJson
+        else call_function("graft_json_normalize", res.rootJson)
+      BV(parse_json(when(!res.deleted && res.assigned, doc)), V)
     case "without" =>
       BV(call_function("graft_json_without", toJsonText(recv),
         lit(args.map(litStr).mkString(","))), J)

@@ -1,7 +1,8 @@
 package graft.functions.expressions
 
+import com.fasterxml.jackson.core.JsonGenerator
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
-import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode, TextNode}
+import com.fasterxml.jackson.databind.node.{ArrayNode, BooleanNode, MissingNode, NumericNode, ObjectNode, TextNode}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** JSON tree kernels behind the graft_json_* Catalyst expressions —
@@ -28,7 +29,9 @@ object JsonKernel {
   /** Deep merge: object∪object merges recursively (right wins on
     * conflict); right-side deleted-sentinel removes the key; any other
     * right value replaces. Output keys sorted (the reference engine
-    * serializes objects with sorted keys, Go map marshaling).
+    * serializes objects with sorted keys, Go map marshaling). Deleted
+    * markers on EITHER side are stripped, so the output is already
+    * canonical: `normalize(merge(a, b)) == merge(a, b)`.
     */
   def merge(left: UTF8String, right: UTF8String): UTF8String = {
     val l = mapper.readTree(left.toString)
@@ -45,7 +48,7 @@ object JsonKernel {
       names.forEach { n =>
         val lv = lo.get(n)
         val rv = ro.get(n)
-        if (rv == null) { out.set(n, lv); () }
+        if (rv == null) { if (!isDeleted(lv)) { out.set(n, stripDeleted(lv)); () } }
         else if (isDeleted(rv)) () // removed
         else if (lv == null) { out.set(n, stripDeleted(rv)); () }
         else { out.set(n, mergeNodes(lv, rv)); () }
@@ -91,7 +94,6 @@ object JsonKernel {
     case _ => ()
   }
 
-  /** Serialize with sorted object keys at every level. */
   /** `collapse` (methods.adoc object section): nested structure →
     * FLAT object keyed by dot paths (arrays index numerically):
     * {"a":{"b":[1]}} → {"a.b.0":1}.
@@ -377,46 +379,45 @@ object JsonKernel {
     UTF8String.fromString(write(infer(mapper.readTree(value.toString))))
   }
 
+  private val factory = mapper.getFactory
+
+  /** Serialize with sorted object keys at every level, streaming the
+    * whole document through ONE generator.
+    */
   private def write(n: JsonNode): String = {
-    val sb = new java.lang.StringBuilder
-    writeNode(n, sb)
-    sb.toString
+    val out = new java.io.StringWriter
+    val g = factory.createGenerator(out)
+    writeNode(n, g)
+    g.close()
+    out.toString
   }
 
-  private def writeNode(n: JsonNode, sb: java.lang.StringBuilder): Unit = n match {
+  private def writeNode(n: JsonNode, g: JsonGenerator): Unit = n match {
     case o: ObjectNode =>
-      sb.append('{')
+      g.writeStartObject()
       val names = new java.util.TreeSet[String]()
       o.fieldNames().forEachRemaining(x => names.add(x))
-      var first = true
       names.forEach { k =>
-        if (!first) sb.append(',')
-        first = false
-        sb.append(new TextNode(k).toString).append(':')
-        writeNode(o.get(k), sb)
+        g.writeFieldName(k)
+        writeNode(o.get(k), g)
       }
-      sb.append('}')
-      ()
+      g.writeEndObject()
     case a: ArrayNode =>
-      sb.append('[')
-      var first = true
-      a.forEach { el =>
-        if (!first) sb.append(',')
-        first = false
-        writeNode(el, sb)
-      }
-      sb.append(']')
-      ()
-    case other =>
+      g.writeStartArray()
+      a.forEach(el => writeNode(el, g))
+      g.writeEndArray()
+    case t: TextNode => g.writeString(t.textValue)
+    case b: BooleanNode => g.writeBoolean(b.booleanValue)
+    case num: NumericNode if num.isFloatingPointNumber && isIntegral(num.doubleValue) =>
       // Go encoding/json semantics (the reference engine's serializer):
       // integral floats print without a decimal point (11.0 → 11)
-      if (other.isFloatingPointNumber) {
-        val d = other.asDouble()
-        if (!d.isInfinite && !d.isNaN && d == Math.rint(d) &&
-            d >= Long.MinValue.toDouble && d <= Long.MaxValue.toDouble)
-          sb.append(d.toLong)
-        else sb.append(other.toString)
-      } else sb.append(other.toString)
-      ()
+      g.writeNumber(num.doubleValue.toLong)
+    case num: NumericNode => g.writeNumber(num.asText)
+    case _: MissingNode => () // empty input: no text at all
+    case _ => g.writeNull()
   }
+
+  private def isIntegral(d: Double): Boolean =
+    !d.isInfinite && !d.isNaN && d == Math.rint(d) &&
+      d >= Long.MinValue.toDouble && d <= Long.MaxValue.toDouble
 }

@@ -410,8 +410,10 @@ object Dedupe {
         .agg(sum(col("df")).as("n"),
           sum(col("df") * (col("df") - lit(1.0)) / 2.0).as("fanout"))
         .head()
-      val n = math.max(1.0, row.getDouble(0))
-      row.getDouble(1) > fanoutCap * n
+      // an empty index (empty corpus, or every doc shorter than
+      // shingleN) sums over zero rows: null, and no fan-out at all
+      !row.isNullAt(0) &&
+        row.getDouble(1) > fanoutCap * math.max(1.0, row.getDouble(0))
     })
   }
 

@@ -255,4 +255,24 @@ class PlanContractSpec extends SparkSpec {
     assert((gated -- queries).isEmpty && (exempt -- queries).isEmpty,
       s"oracle entries without a query: ${(gated ++ exempt) -- queries}")
   }
+
+  test("a run of JSON-mode field assignments is ONE json merge, no normalize") {
+    import spark.implicits._
+    import graft.functions.expressions.{JsonMerge, JsonNormalize}
+    val src = ("root = this" +: (1 to 9).map(i => s"root.f$i = this.a + $i"))
+      .mkString("\n")
+    // a Range source: a local relation would constant-fold the mapping
+    val docs = spark.range(3).select(to_json(struct(col("id").as("a"))).as("value"))
+    val q = graft.blobl.Blobl.mapping(docs, src)
+    val exprs = q.queryExecution.optimizedPlan
+      .flatMap(_.expressions.flatMap(_.collect { case e => e }))
+    val merges = exprs.count(_.isInstanceOf[JsonMerge])
+    val normalizes = exprs.count(_.isInstanceOf[JsonNormalize])
+    assert(merges == 1 && normalizes == 0,
+      s"$merges merges, $normalizes normalizes in:\n${q.queryExecution.optimizedPlan}")
+    assert(q.select("value").as[String].collect().toSeq == (0 to 2).map { a =>
+      (("a" -> a) +: (1 to 9).map(i => s"f$i" -> (a + i)))
+        .map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")
+    })
+  }
 }

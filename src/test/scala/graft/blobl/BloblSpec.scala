@@ -383,4 +383,103 @@ class BloblSpec extends SparkSpec {
     assert(m.get("w").get(0).asText == "a" + eAcute + "b")
     assert(m.get("n").asInt == 3)
   }
+
+  // Runs of field assignments land as one merge; these statements must
+  // flush the pending run first so statement order holds. Expected
+  // outputs equal those of merging each assignment on its own.
+  private val flushInputs = Seq(
+    // object carrying deleted markers (left-only ones vanish)
+    """{"a":1,"b":{"c":"d"},"s":"str","e":" graft:deleted ","arr":[1," graft:deleted "],"q":{"keep":" graft:deleted "}}""",
+    """{"a":2,"b":[1,2],"q":{"r":0},"t":{"x":1}}""",
+    """[1,2,3]""",
+    """hello world""")
+
+  private val flushCases: Seq[(String, Seq[String])] = Seq(
+    // repeated head
+    "root = this\nroot.a = 1\nroot.a = 2" -> Seq(
+      """{"a":2,"arr":[1],"b":{"c":"d"},"q":{},"s":"str"}""",
+      """{"a":2,"b":[1,2],"q":{"r":0},"t":{"x":1}}""", """{"a":2}""", null),
+    // repeated head after deleted()
+    "root = this\nroot.q = deleted()\nroot.q.r = 1" -> Seq(
+      """{"a":1,"arr":[1],"b":{"c":"d"},"q":{"r":1},"s":"str"}""",
+      """{"a":2,"b":[1,2],"q":{"r":1},"t":{"x":1}}""", """{"q":{"r":1}}""", null),
+    // RHS reads root
+    "root.a = 1\nroot.b = root.a\nroot.c = this.b" -> Seq(
+      """{"a":1,"b":1,"c":{"c":"d"}}""", """{"a":1,"b":1,"c":[1,2]}""",
+      """{"a":1,"b":1,"c":null}""", """{"a":1,"b":1,"c":null}"""),
+    // assigned nulls survive the merge
+    "root.n = null\nroot.m = this.missing" ->
+      Seq.fill(4)("""{"m":null,"n":null}"""),
+    // nested paths sharing a head
+    "root.t.u = 5\nroot.t.v = 6\nroot.w = 7" ->
+      Seq.fill(4)("""{"t":{"u":5,"v":6},"w":7}"""),
+    // omit-null value (if without else)
+    "root.x = if this.a == 1 { 10 }\nroot.y = 2" -> Seq(
+      """{"x":10,"y":2}""", """{"y":2}""", """{"y":2}""", """{"y":2}"""),
+    // statement-level if
+    "if this.a == 1 { root.z = 1 }\nroot.zz = 2" -> Seq(
+      """{"z":1,"zz":2}""", """{"zz":2}""", """{"zz":2}""", """{"zz":2}"""),
+    // array segment after a field
+    "root.f = 1\nroot.list.\"-\".v = this.a\nroot.g = 2" -> Seq(
+      """{"f":1,"g":2,"list":[{"v":1}]}""", """{"f":1,"g":2,"list":[{"v":2}]}""",
+      """{"f":1,"g":2,"list":[{"v":null}]}""", """{"f":1,"g":2,"list":[{"v":null}]}"""),
+    // whole-root assignment followed by a field
+    "root = this.b\nroot.c = 3" -> Seq(
+      """{"c":3}""", """{"c":3}""", null, null),
+    // let reading root
+    "root.a = this.a\nlet r = root.a\nroot.b = $r" -> Seq(
+      """{"a":1,"b":1}""", """{"a":2,"b":2}""",
+      """{"a":null,"b":null}""", """{"a":null,"b":null}"""))
+
+  test("field-assignment runs: flush rules keep statement order") {
+    import spark.implicits._
+    for ((src, expected) <- flushCases) {
+      val out = Blobl.mapping(docs(flushInputs: _*), src)
+        .select("value").as[String].collect().toSeq
+      assert(out == expected, s"mapping:\n$src")
+    }
+    // mutation overlays the input; result_map overlays {"r":1} with
+    // `this` = the input
+    val overlay = Seq(
+      "root.a = 1\nroot.b = root.a\nroot.c = this.b" -> (Seq(
+        """{"a":1,"arr":[1],"b":1,"c":{"c":"d"},"q":{},"s":"str"}""",
+        """{"a":1,"b":1,"c":[1,2],"q":{"r":0},"t":{"x":1}}""",
+        """{"a":1,"b":1,"c":null}"""), Seq(
+        """{"a":1,"b":1,"c":{"c":"d"},"r":1}""",
+        """{"a":1,"b":1,"c":[1,2],"r":1}""",
+        """{"a":1,"b":1,"c":null,"r":1}""")),
+      "root.t.u = 5\nroot.t.v = 6\nroot.w = 7" -> (Seq(
+        """{"a":1,"arr":[1],"b":{"c":"d"},"q":{},"s":"str","t":{"u":5,"v":6},"w":7}""",
+        """{"a":2,"b":[1,2],"q":{"r":0},"t":{"u":5,"v":6,"x":1},"w":7}""",
+        """{"t":{"u":5,"v":6},"w":7}"""),
+        Seq.fill(3)("""{"r":1,"t":{"u":5,"v":6},"w":7}""")),
+      "root.x = if this.a == 1 { 10 }\nroot.y = 2" -> (Seq(
+        """{"a":1,"arr":[1],"b":{"c":"d"},"q":{},"s":"str","x":10,"y":2}""",
+        """{"a":2,"b":[1,2],"q":{"r":0},"t":{"x":1},"y":2}""",
+        """{"y":2}"""), Seq(
+        """{"r":1,"x":10,"y":2}""", """{"r":1,"y":2}""", """{"r":1,"y":2}""")))
+    val json = flushInputs.take(3)
+    for ((src, (mutated, resultMapped)) <- overlay) {
+      assert(Blobl.mutation(docs(json: _*), src).select("value").as[String]
+        .collect().toSeq == mutated, s"mutation:\n$src")
+      val branched = json.map(j => (j, """{"r":1}""")).toDF("value", "doc")
+      assert(Blobl.resultMap(branched, src, "value", "doc").select("doc")
+        .as[String].collect().toSeq == resultMapped, s"result_map:\n$src")
+    }
+  }
+
+  test("named map bodies batch their field assignments too") {
+    val src = """map m {
+                |  root.x = this.a
+                |  root.y.z = this.b
+                |  root.x2 = 3
+                |  root.x = 4
+                |}
+                |root = this.apply("m")
+                |root.w = 1""".stripMargin
+    assert(mapped(src, Map.empty, flushInputs.take(3): _*) == Seq(
+      """{"w":1,"x":4,"x2":3,"y":{"z":{"c":"d"}}}""",
+      """{"w":1,"x":4,"x2":3,"y":{"z":[1,2]}}""",
+      """{"w":1,"x":4,"x2":3,"y":{"z":null}}"""))
+  }
 }

@@ -290,4 +290,15 @@ class DedupeStagingSpec extends SparkSpec {
     assert(count == expected)
     assert(prefix.nonEmpty)
   }
+
+  test("degenerate corpora: empty, and every doc shorter than shingleN, " +
+      "return no pairs") {
+    val empty = Seq.empty[(Long, String)].toDF("doc_id", "text")
+    assert(pairs(Dedupe.ngramJaccardPairs(empty, "text", "doc_id", 3, 0.35))
+      .isEmpty)
+    val short = Seq((1L, "a b"), (2L, "a b"), (3L, "c")).toDF("doc_id", "text")
+    assert(pairs(Dedupe.ngramJaccardPairs(short, "text", "doc_id", 3, 0.35))
+      .isEmpty)
+    assert(!Dedupe.boilerplateHeavy(setsAndIndex(empty)._2))
+  }
 }
